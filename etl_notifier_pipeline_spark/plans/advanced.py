@@ -424,7 +424,7 @@ def st06_approval_pipeline_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     upd.to_csv(f"{csv_root}/cust_upd.csv", index=False)
     pdf.iloc[:5].to_csv(f"{csv_root}/cust_del.csv", index=False)
 
-    # Default store: BucketedTableStore at store_root — the sim runs
+    # The pipeline's BucketedTableStore at store_root — the sim runs
     # the same incremental keyed-mutation path a production pipeline
     # would (O(affected buckets) per approved event).
     pipe = ApprovalPipeline(

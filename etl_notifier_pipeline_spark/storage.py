@@ -838,8 +838,13 @@ class BucketedTableStore:
     Delta/Iceberg this maps to MERGE with partition pruning.
 
     ``keys`` declares each table's bucketing columns (the pipeline's
-    primary-key registry); tables without declared keys bucket by all
-    columns (append/read work; keyed mutations require declared keys).
+    primary-key registry). Tables without declared keys (the ledger's
+    control tables, keyless inserts) are never read or mutated by key,
+    so they write a single bucket; keyed mutations and ``read_keyed``
+    require declared keys. Every manifest records the table's
+    ``n_buckets``, and the table keeps that layout whatever bucket count
+    a later opener passes (manifests that predate the record fall back
+    to the instance's ``n_buckets``).
     """
 
     def __init__(
@@ -907,11 +912,21 @@ class BucketedTableStore:
         with open(os.path.join(self._dir(table), f"v={v}", "_manifest.json")) as f:
             return json.load(f)
 
-    def _bucket_col(self, table: str, df: DataFrame):
-        from pyspark.sql import functions as F
+    def _table_buckets(self, table: str) -> int:
+        """The bucket count ``table`` was written with, else this
+        instance's ``n_buckets`` (new table, or a manifest without it)."""
+        v = self.current_version(table)
+        if v is None:
+            return self.n_buckets
+        return self._manifest(table, v).get("n_buckets", self.n_buckets)
 
-        cols = self.keys.get(table) or df.columns
-        return F.pmod(F.xxhash64(*cols), F.lit(self.n_buckets)).cast("int")
+    def _bucket_col(self, table: str):
+        keys = self.keys.get(table)
+        if not keys:
+            return F.lit(0)
+        return F.pmod(
+            F.xxhash64(*keys), F.lit(self._table_buckets(table))
+        ).cast("int")
 
     def _write_version(
         self, table: str, df: DataFrame, carry: dict[str, list[str]] | None,
@@ -950,6 +965,7 @@ class BucketedTableStore:
         entries dropped)."""
         v = (self.current_version(table) or 0) + 1
         vrel = f"v={v}"
+        n_buckets = self._table_buckets(table)
         staging = self._bstage(table, df)
         if cdc_from_staged is not None:
             try:
@@ -972,9 +988,7 @@ class BucketedTableStore:
             )
         if delta_df is not None:
             (
-                delta_df.withColumn(
-                    "__bucket", self._bucket_col(table, delta_df)
-                )
+                delta_df.withColumn("__bucket", self._bucket_col(table))
                 .write.partitionBy("__bucket")
                 .mode("overwrite")
                 .parquet(os.path.join(staging, "delta"))
@@ -999,7 +1013,10 @@ class BucketedTableStore:
                 if name.startswith("__bucket="):
                     k = name.removeprefix("__bucket=")
                     deltas.setdefault(k, []).append(f"{vrel}/delta/{name}")
-        manifest = {"schema": f"{vrel}/schema", "buckets": buckets}
+        manifest = {
+            "schema": f"{vrel}/schema", "n_buckets": n_buckets,
+            "buckets": buckets,
+        }
         if deltas:
             manifest["deltas"] = deltas
         if manifest_extra:
@@ -1014,7 +1031,7 @@ class BucketedTableStore:
         staging = tempfile.mkdtemp(dir=self._dir(table), prefix=".staging-")
         df.limit(0).write.mode("overwrite").parquet(os.path.join(staging, "schema"))
         (
-            df.withColumn("__bucket", self._bucket_col(table, df))
+            df.withColumn("__bucket", self._bucket_col(table))
             .write.partitionBy("__bucket")
             .mode("overwrite")
             .parquet(os.path.join(staging, "data"))
@@ -1175,7 +1192,7 @@ class BucketedTableStore:
         ids = {
             r["b"]
             for r in probe.select(
-                self._bucket_col(table, probe).alias("b")
+                self._bucket_col(table).alias("b")
             ).distinct().collect()
         }
         part = self._read_paths(table, ids, version)
@@ -1262,7 +1279,10 @@ class BucketedTableStore:
                 if name.startswith("__bucket="):
                     k = name.removeprefix("__bucket=")
                     buckets.setdefault(k, []).append(f"{vrel}/data/{name}")
-        manifest = {"schema": f"{vrel}/schema", "buckets": buckets}
+        manifest = {
+            "schema": f"{vrel}/schema", "n_buckets": self._table_buckets(table),
+            "buckets": buckets,
+        }
         if m.get("deltas"):
             # enforced above: appended keys are disjoint from delta
             # keys, so carried deltas cannot shadow the new rows
@@ -1308,17 +1328,31 @@ class BucketedTableStore:
           ``compact()`` folds the deltas into the base. Same winners
           as copy_on_write (pinned in tests/test_bucketed_store.py).
         """
-        from pyspark.sql import functions as F
-
         from etl_notifier_pipeline_spark.operators.mutations import (
             delete_by_keys,
             insert_if_absent,
             upsert,
         )
 
-        if self.keys.get(table) is None:
+        declared = self.keys.get(table)
+        if declared is None:
             raise ValueError(
                 f"apply_keyed_mutation needs declared bucket keys for {table!r}"
+            )
+        # Buckets are hashed, and merge-on-read deltas reconciled, by the
+        # DECLARED keys: a mutation under other key columns would read
+        # the wrong buckets (copy_on_write) or shadow by the wrong
+        # columns (merge_on_read). Compare as SETS — joins are
+        # order-insensitive — but reject duplicates, which set()
+        # alone would let through into the joins.
+        if len(set(keys)) != len(list(keys)):
+            raise ValueError(
+                f"mutation keys {list(keys)} contain duplicate column names"
+            )
+        if set(keys) != set(declared):
+            raise ValueError(
+                f"mutation keys {sorted(keys)} must equal the declared "
+                f"bucket keys {sorted(declared)} for {table!r}"
             )
         if strategy not in ("copy_on_write", "merge_on_read"):
             raise ValueError(f"unknown strategy {strategy!r}")
@@ -1331,12 +1365,10 @@ class BucketedTableStore:
                 table, incoming.select(*data_cols).limit(0),
                 carry=None, affected=None,
             )
-        bucket = F.pmod(
-            F.xxhash64(*self.keys[table]), F.lit(self.n_buckets)
-        ).cast("int")
         affected = {
             r["b"]
-            for r in incoming.select(bucket.alias("b")).distinct().collect()
+            for r in incoming.select(self._bucket_col(table).alias("b"))
+            .distinct().collect()
         }
         if strategy == "merge_on_read":
             v = self._apply_mutation_mor(
@@ -1446,30 +1478,6 @@ class BucketedTableStore:
             snapshot_diff,
         )
 
-        # Read-side reconciliation (_reconcile_deltas) shadows by the
-        # DECLARED bucket keys; a delta written under different key
-        # columns would be reconciled wrongly and append()'s shadow
-        # check would probe the wrong columns (r9 advice #3).
-        # Compare as SETS — joins are order-insensitive, so a caller
-        # passing the same columns in a different order was always
-        # valid — and use .get so an undeclared table raises the
-        # intended diagnostic, not a bare KeyError.
-        declared = self.keys.get(table)
-        if len(set(keys)) != len(list(keys)):
-            # set() comparison alone would let ['a','a','b'] pass for
-            # declared ['a','b'] and flow duplicated columns into the
-            # reconciliation joins.
-            raise ValueError(
-                f"merge_on_read mutation keys {list(keys)} contain duplicate "
-                f"column names"
-            )
-        if declared is None or set(keys) != set(declared):
-            raise ValueError(
-                f"merge_on_read mutation keys {sorted(keys)} must equal the "
-                f"declared bucket keys "
-                f"{sorted(declared) if declared else None} for "
-                f"{table!r} — reconciliation shadows by the declared keys"
-            )
         # delta rows carry the BASE table's full column set (a delete
         # batch brings only keys — its tombstones get typed NULLs)
         base_schema = self.read(table).schema
@@ -1668,51 +1676,3 @@ class BucketedTableStore:
                     )
             elif name.startswith(".staging-"):
                 _sweep_stale_staging(os.path.join(self._dir(table), name))
-
-
-class CatalogTableStore:
-    """Metastore-backed TableStore twin (SURVEY §1.3's
-    ``df.write.saveAsTable`` mapping): tables live in the session
-    catalog / warehouse dir under a namespace instead of the
-    pointer-file layout. Same duck-typed surface the control plane uses
-    (exists/read/overwrite/append), so ``Ledger``/``ApprovalPipeline``
-    run unchanged against either backend.
-
-    Trade-offs vs ``TableStore`` (deliberate, documented): the catalog
-    handles concurrent readers and name resolution, and ``append`` is a
-    true file-level append; but plain-parquet ``saveAsTable`` overwrite
-    is not atomic mid-write — pick THIS backend when a metastore is the
-    deployment target (with Delta/Iceberg providing the transactional
-    overwrite), the pointer-swap backend when it is not.
-    """
-
-    def __init__(self, spark: SparkSession, namespace: str = "engine") -> None:
-        self.spark = spark
-        self.namespace = namespace
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {namespace}")
-
-    def _qualified(self, table: str) -> str:
-        return f"{self.namespace}.{table}"
-
-    def exists(self, table: str) -> bool:
-        return self.spark.catalog.tableExists(self._qualified(table))
-
-    def read(self, table: str) -> DataFrame:
-        return self.spark.table(self._qualified(table))
-
-    def overwrite(self, table: str, df: DataFrame) -> int:
-        # Self-referential overwrites (the mutation pattern: read t,
-        # transform, write t) must materialize first — saveAsTable
-        # cannot scan the table it is truncating. localCheckpoint keeps
-        # the materialization distributed (executor-local blocks, no
-        # driver collect).
-        if self.exists(table):
-            df = df.localCheckpoint()
-        df.write.mode("overwrite").format("parquet").saveAsTable(
-            self._qualified(table)
-        )
-        return 0
-
-    def append(self, table: str, df: DataFrame) -> int:
-        df.write.mode("append").format("parquet").saveAsTable(self._qualified(table))
-        return 0

@@ -14,8 +14,9 @@ keyed mutation + ledger update + email (EP3), scheduled delete drain
   ledger status transitions (ST2), poison-row dead-lettering (ST3) and
   a notification hook per outcome (S14/ST6).
 - exactly-once: redelivered event_ids are dropped against the ledger,
-  and every effect is an idempotent TableStore swap keyed by content —
-  the Spark checkpoint gives at-least-once delivery on top.
+  and every effect is an idempotent keyed commit to the
+  ``BucketedTableStore`` — the Spark checkpoint gives at-least-once
+  delivery on top.
 
 The notifier replaces the reference's Microsoft-Graph email sender
 (``process-pipeline.py:389-410``) with a pluggable interface; the
@@ -25,6 +26,7 @@ default just logs. No network calls anywhere.
 from __future__ import annotations
 
 import logging
+import tempfile
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,9 +35,8 @@ from pyspark.sql import types as T
 
 from etl_notifier_pipeline_spark.functions import decode_event_payload
 from etl_notifier_pipeline_spark.ledger import Ledger
-from etl_notifier_pipeline_spark.operators import delete_by_keys, insert_if_absent, upsert
 from etl_notifier_pipeline_spark.sources.ingest import read_csv_all_string
-from etl_notifier_pipeline_spark.storage import TableStore
+from etl_notifier_pipeline_spark.storage import BucketedTableStore
 
 log = logging.getLogger(__name__)
 
@@ -140,12 +141,8 @@ class ApprovalPipeline:
     notifier: Notifier
     keys: dict[str, list[str]]  # table -> primary-key columns (replaces S6 catalog)
     csv_root: str  # where "bucket" files live locally
-    # Default backend is the incremental BucketedTableStore (built at
-    # ``store_root``, or a temp dir if unset): keyed mutations rewrite
-    # O(affected buckets), not O(table) — the 100 TB-survivable default.
-    # Pass ``store=`` explicitly (e.g. a plain full-rewrite TableStore)
-    # to opt out.
-    store: TableStore | None = None
+    # Root of the pipeline's BucketedTableStore (a temp dir if unset):
+    # keyed mutations rewrite O(affected buckets), not O(table).
     store_root: str | None = None
     # Driver-side staging iterates the micro-batch's approval events
     # (human-in-the-loop click rates — tens, not millions). Nothing
@@ -157,13 +154,8 @@ class ApprovalPipeline:
     max_events_per_batch: int = 10_000
 
     def __post_init__(self) -> None:
-        if self.store is None:
-            import tempfile
-
-            from etl_notifier_pipeline_spark.storage import BucketedTableStore
-
-            root = self.store_root or tempfile.mkdtemp(prefix="pipeline_store_")
-            self.store = BucketedTableStore(self.spark, root, keys=self.keys)
+        root = self.store_root or tempfile.mkdtemp(prefix="pipeline_store_")
+        self.store = BucketedTableStore(self.spark, root, keys=self.keys)
         self.ledger = Ledger(self.spark, self.store)
         self.dead_letters: list[dict] = []
 
@@ -184,9 +176,9 @@ class ApprovalPipeline:
         - approved mutations coalesce into runs of consecutive
           same-``(table, operation)`` events (per table — tables are
           independent, so interleaved tables don't break a run), each
-          run applying ONE combined mutation plan + ONE table
-          overwrite. Two hundred approved inserts into one table in a
-          batch = one read + one write of that table, not two hundred.
+          run applying ONE combined keyed mutation. Two hundred
+          approved inserts into one table in a batch = one commit
+          touching the affected buckets, not two hundred.
           Cross-event precedence rides on an ``__event_seq`` column
           (batch order) ahead of ``__file_order``, so first/last-
           per-key winners match the sequential semantics exactly;
@@ -253,7 +245,7 @@ class ApprovalPipeline:
                 run_order.append((table, len(runs) - 1))
             runs[-1][1].append((ev, incoming))
 
-        # Stage 2: ONE combined mutation plan + ONE overwrite per run.
+        # Stage 2: ONE combined keyed mutation per run.
         for table, idx in run_order:
             (op, _), items = runs_by_table[table][idx]
             try:
@@ -349,7 +341,7 @@ class ApprovalPipeline:
         position) so ``(__event_seq, __file_order)`` totally orders all
         rows of the run exactly as sequential application would have:
         insert keeps the FIRST row per key across the whole run, update
-        the LAST — identical winners, one table write.
+        the LAST — identical winners, one commit.
         """
         keys = self.keys.get(table)
         combined = None
@@ -357,7 +349,6 @@ class ApprovalPipeline:
             inc = inc.withColumn("__event_seq", F.lit(seq))
             combined = inc if combined is None else combined.unionByName(inc)
         order = ["__event_seq", "__file_order"]
-        helper = ["__event_id", "__event_seq", "__file_order"]
 
         if op == "delete":
             # ST4: queue, don't execute (two-phase). queue_deletes
@@ -388,25 +379,14 @@ class ApprovalPipeline:
             if op == "insert"
             else f"Upserted file rows into {table}."
         )
-        if keys and hasattr(self.store, "apply_keyed_mutation"):
-            # Incremental backend (BucketedTableStore / Delta-shaped):
-            # the store rewrites only the buckets the incoming keys
-            # hash into — O(affected buckets), not O(table).
+        if keys:
+            # the store rewrites only the buckets the incoming keys hash
+            # into — O(affected buckets), not O(table); a first arrival
+            # creates the table all-string from the headers (S8)
             self.store.apply_keyed_mutation(table, combined, keys, order, op)
-            return {ev["event_id"]: details for ev, _ in items}
-        if not self.store.exists(table):
-            # S8: create on first arrival — all-string from headers
-            self.store.overwrite(table, combined.drop(*helper).limit(0))
-        target = self.store.read(table)
-        if op == "insert":
-            result = (
-                insert_if_absent(target, combined, keys, order)
-                if keys
-                else target.unionByName(combined.drop(*helper))
-            )
         else:
-            result = upsert(target, combined, keys, order)
-        self.store.overwrite(table, result)
+            # no registered key: insert is a plain union-all append
+            self.store.append(table, combined.drop("__event_id", *order))
         return {ev["event_id"]: details for ev, _ in items}
 
     # -- EP4: scheduled delete drain ---------------------------------------
@@ -424,12 +404,7 @@ class ApprovalPipeline:
                     .select(F.from_json("key_json", key_schema).alias("k"))
                     .select("k.*")
                 )
-                if hasattr(self.store, "apply_keyed_mutation"):
-                    self.store.apply_keyed_mutation(table, key_df, keys, [], "delete")
-                else:
-                    self.store.overwrite(
-                        table, delete_by_keys(self.store.read(table), key_df, keys)
-                    )
+                self.store.apply_keyed_mutation(table, key_df, keys, [], "delete")
 
         return self.ledger.drain_deletes(apply)
 

@@ -137,24 +137,86 @@ class TestIncrementalBytes:
         with pytest.raises(ValueError, match="bucket keys"):
             bstore.apply_keyed_mutation("u", inc, ["x"], [], "update")
 
+    def test_copy_on_write_rejects_divergent_mutation_keys(self, spark, bstore):
+        """Buckets hash by the DECLARED keys, so a copy_on_write
+        mutation under other key columns would read the wrong buckets
+        and leave duplicate keys: it must raise, as merge_on_read does,
+        and leave the table untouched."""
+        bstore.overwrite("t", spark.createDataFrame([(1, "a")], ["k", "v"]))
+        inc = spark.createDataFrame([(1, "A")], ["k", "v"]).withColumn(
+            "__file_order", F.monotonically_increasing_id()
+        )
+        with pytest.raises(ValueError, match="declared bucket keys"):
+            bstore.apply_keyed_mutation("t", inc, ["v"], ["__file_order"], "update")
+        with pytest.raises(ValueError, match="duplicate"):
+            bstore.apply_keyed_mutation(
+                "t", inc, ["k", "k"], ["__file_order"], "update"
+            )
+        assert [tuple(r) for r in bstore.read("t").collect()] == [(1, "a")]
+
+    def test_reopen_with_other_n_buckets_keeps_table_layout(self, spark, tmp_path):
+        """Every manifest records the table's n_buckets: a store opened
+        with a different count still hashes keys into the table's own
+        buckets, so keyed mutations and point reads find existing rows
+        instead of duplicating them."""
+        root = str(tmp_path / "nb")
+        BucketedTableStore(spark, root, keys={"t": ["k"]}, n_buckets=8).overwrite(
+            "t", spark.createDataFrame([(i, f"v{i}") for i in range(100)], ["k", "v"])
+        )
+        store = BucketedTableStore(spark, root, keys={"t": ["k"]})  # 64 buckets
+        upd = spark.createDataFrame(
+            [(i, f"new{i}") for i in range(10)], ["k", "v"]
+        ).withColumn("__file_order", F.monotonically_increasing_id())
+        store.apply_keyed_mutation("t", upd, ["k"], ["__file_order"], "update")
+        rows = store.read("t").collect()
+        assert len(rows) == 100
+        assert {r["k"]: r["v"] for r in rows} == {
+            i: f"new{i}" if i < 10 else f"v{i}" for i in range(100)
+        }
+        assert store._manifest("t", store.current_version("t"))["n_buckets"] == 8
+        probe = spark.createDataFrame([(3,), (50,)], ["k"])
+        assert sorted(tuple(r) for r in store.read_keyed("t", probe).collect()) == [
+            (3, "new3"), (50, "v50")]
+
+    def test_keyless_table_writes_one_bucket(self, spark, bstore, tmp_path):
+        """Tables without declared keys are never read or mutated by
+        key, so their rows are not hashed: every write lands in bucket
+        0. A table already spread over many buckets still reads whole
+        and takes appends."""
+        rows = spark.createDataFrame([(i, "x") for i in range(50)], ["a", "b"])
+        bstore.overwrite("log", rows)
+        bstore.append("log", spark.createDataFrame([(99, "y")], ["a", "b"]))
+        m = bstore._manifest("log", bstore.current_version("log"))
+        assert list(m["buckets"]) == ["0"] and len(m["buckets"]["0"]) == 2
+        assert bstore.read("log").count() == 51
+
+        root = str(tmp_path / "spread")
+        BucketedTableStore(spark, root, keys={"log": ["a"]}, n_buckets=8).overwrite(
+            "log", rows
+        )
+        keyless = BucketedTableStore(spark, root)
+        keyless.append("log", spark.createDataFrame([(99, "y")], ["a", "b"]))
+        m = keyless._manifest("log", keyless.current_version("log"))
+        assert len(m["buckets"]) > 1
+        assert keyless.read("log").count() == 51
+
 
 class TestPipelineOnBucketedBackend:
     def test_ledger_pipeline_runs_incremental(self, spark, tmp_path):
         """Full approval lifecycle on the bucketed backend: mutations go
         through apply_keyed_mutation (no full-table rewrite), results
-        identical to the pointer-swap backend."""
-        store = BucketedTableStore(
-            spark, str(tmp_path / "store"), keys={"people": ["pid"]}, n_buckets=8
-        )
+        identical to the sequential semantics."""
         csv_root = tmp_path / "bucket"
         csv_root.mkdir()
         (csv_root / "people.csv").write_text("pid,name\n1,ann\n2,bob\n")
         (csv_root / "people_v2.csv").write_text("pid,name\n2,BOB\n3,cyd\n")
         (csv_root / "people_del.csv").write_text("pid,name\n1,ann\n")
         pipe = ApprovalPipeline(
-            spark=spark, store=store, notifier=LogNotifier(),
+            spark=spark, notifier=LogNotifier(),
             keys={"people": ["pid"]}, csv_root=str(csv_root),
+            store_root=str(tmp_path / "store"),
         )
+        store = pipe.store
         from tests.test_ledger_pipeline import batch, ev
 
         pipe.ledger.record_arrivals(spark.createDataFrame(
@@ -174,11 +236,10 @@ class TestPipelineOnBucketedBackend:
         assert statuses == {"e1": "approved", "e2": "approved", "e3": "approved"}
 
     def test_default_store_is_bucketed_and_incremental(self, spark, tmp_path):
-        """Constructing ApprovalPipeline WITHOUT a store must yield a
-        BucketedTableStore at store_root (r04: incremental is the
-        default; plain TableStore is the explicit opt-out), and a keyed
-        update through the pipeline path must rewrite only the affected
-        buckets."""
+        """ApprovalPipeline must build a BucketedTableStore at
+        store_root (r04: incremental is the only write path), and a
+        keyed update through the pipeline path must rewrite only the
+        affected buckets."""
         csv_root = tmp_path / "bucket"
         csv_root.mkdir()
         (csv_root / "people.csv").write_text(

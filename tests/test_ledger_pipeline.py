@@ -65,7 +65,7 @@ class TestLedger:
 
 
 @pytest.fixture()
-def pipeline(spark, tmp_store, tmp_path):
+def pipeline(spark, tmp_path):
     csv_root = tmp_path / "bucket"
     csv_root.mkdir()
     (csv_root / "people.csv").write_text("pid,name\n1,ann\n2,bob\n")
@@ -73,8 +73,9 @@ def pipeline(spark, tmp_store, tmp_path):
     (csv_root / "people_del.csv").write_text("pid,name\n1,ann\n")
     notifier = LogNotifier()
     pipe = ApprovalPipeline(
-        spark=spark, store=tmp_store, notifier=notifier,
+        spark=spark, notifier=notifier,
         keys={"people": ["pid"]}, csv_root=str(csv_root),
+        store_root=str(tmp_path / "store"),
     )
     return pipe
 
@@ -96,7 +97,7 @@ def batch(spark, *events):
 
 
 class TestApprovalPipeline:
-    def test_insert_upsert_delete_flow(self, spark, pipeline, tmp_store):
+    def test_insert_upsert_delete_flow(self, spark, pipeline):
         led = pipeline.ledger
         led.record_arrivals(make_arrivals(
             spark, ("people.csv", "e1", "b", "insert"),
@@ -105,26 +106,26 @@ class TestApprovalPipeline:
         ))
         # EP3: approve insert
         pipeline.run_batch(batch(spark, ev("e1", "approve", "people.csv", "people", "insert")))
-        assert sorted(tuple(r) for r in tmp_store.read("people").collect()) == [
+        assert sorted(tuple(r) for r in pipeline.store.read("people").collect()) == [
             ("1", "ann"), ("2", "bob")]
         # approve upsert
         pipeline.run_batch(batch(spark, ev("e2", "approve", "people_v2.csv", "people", "update")))
-        assert sorted(tuple(r) for r in tmp_store.read("people").collect()) == [
+        assert sorted(tuple(r) for r in pipeline.store.read("people").collect()) == [
             ("1", "ann"), ("2", "BOB"), ("3", "cyd")]
         # approve delete -> queued, table unchanged (two-phase, ST4)
         pipeline.run_batch(batch(spark, ev("e3", "approve", "people_del.csv", "people", "delete")))
-        assert tmp_store.read("people").count() == 3
+        assert pipeline.store.read("people").count() == 3
         assert led.delete_control().filter(~F.col("executed_flag")).count() == 1
         # EP4 drain executes the delete
         assert pipeline.drain_deletes() == 1
-        assert sorted(tuple(r) for r in tmp_store.read("people").collect()) == [
+        assert sorted(tuple(r) for r in pipeline.store.read("people").collect()) == [
             ("2", "BOB"), ("3", "cyd")]
         # ledger statuses all approved + processed
         statuses = {r["event_id"]: r["status"] for r in led.processed_files().collect()}
         assert statuses == {"e1": "approved", "e2": "approved", "e3": "approved"}
         assert len(pipeline.notifier.sent) == 3
 
-    def test_batch_cap_bounds_driver_collect(self, spark, pipeline, tmp_store):
+    def test_batch_cap_bounds_driver_collect(self, spark, pipeline):
         """r10 verdict ask #5: the staging collect is policy-bounded.
         A micro-batch past ``max_events_per_batch`` raises (before
         materializing on the driver — the collect is limit(cap+1));
@@ -142,17 +143,36 @@ class TestApprovalPipeline:
             pipeline.run_batch(batch(spark, *events))
         # at-cap batch flows through untouched
         pipeline.run_batch(batch(spark, *events[:2]))
-        assert tmp_store.read("people").count() == 2
+        assert pipeline.store.read("people").count() == 2
 
-    def test_reject_and_replay(self, spark, pipeline, tmp_store):
+    def test_keyless_insert_appends_every_row(self, spark, pipeline, tmp_path):
+        """A table with no registered key takes an approved insert as a
+        union-all append: every file row lands, duplicates included,
+        and a second approved insert of the same file appends again."""
+        (tmp_path / "bucket" / "notes.csv").write_text("note\nhi\nhi\nyo\n")
+        pipeline.ledger.record_arrivals(make_arrivals(
+            spark, ("notes.csv", "n1", "b", "insert"),
+            ("notes.csv", "n2", "b", "insert"),
+        ))
+        pipeline.run_batch(batch(spark, ev("n1", "approve", "notes.csv", "notes", "insert")))
+        assert sorted(r["note"] for r in pipeline.store.read("notes").collect()) == [
+            "hi", "hi", "yo"]
+        pipeline.run_batch(batch(spark, ev("n2", "approve", "notes.csv", "notes", "insert")))
+        assert sorted(r["note"] for r in pipeline.store.read("notes").collect()) == [
+            "hi", "hi", "hi", "hi", "yo", "yo"]
+        statuses = {r["event_id"]: r["status"]
+                    for r in pipeline.ledger.processed_files().collect()}
+        assert statuses == {"n1": "approved", "n2": "approved"}
+
+    def test_reject_and_replay(self, spark, pipeline):
         led = pipeline.ledger
         led.record_arrivals(make_arrivals(spark, ("people.csv", "e1", "b", "insert")))
         pipeline.run_batch(batch(spark, ev("e1", "reject", "people.csv", "people", "insert")))
-        assert not tmp_store.exists("people")  # nothing ingested
+        assert not pipeline.store.exists("people")  # nothing ingested
         assert led.processed_files().collect()[0]["status"] == "rejected"
         # replay of the same event_id is a no-op (ST1 exactly-once)
         pipeline.run_batch(batch(spark, ev("e1", "approve", "people.csv", "people", "insert")))
-        assert not tmp_store.exists("people")
+        assert not pipeline.store.exists("people")
         assert led.processed_files().collect()[0]["status"] == "rejected"
 
     def test_poison_event_dead_letter(self, spark, pipeline):
@@ -168,7 +188,7 @@ class TestApprovalPipeline:
         assert len(dl) == 1 and dl[0]["event_id"] == "e9"
         assert dl[0]["error"]
 
-    def test_delete_without_pk_fails(self, spark, pipeline, tmp_store):
+    def test_delete_without_pk_fails(self, spark, pipeline):
         led = pipeline.ledger
         led.record_arrivals(make_arrivals(spark, ("people_del.csv", "e4", "b", "delete")))
         pipeline.keys = {}

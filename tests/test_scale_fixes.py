@@ -59,7 +59,7 @@ class TestFileLevelAppend:
 
 
 class TestBatchedLedgerMarks:
-    def test_one_ledger_rewrite_per_micro_batch(self, spark, tmp_store, tmp_path):
+    def test_one_ledger_rewrite_per_micro_batch(self, spark, tmp_path):
         """A 3-event micro-batch must advance the processed_files
         version by exactly 1 (mark_many), not once per event."""
         csv_root = tmp_path / "bucket"
@@ -67,7 +67,8 @@ class TestBatchedLedgerMarks:
         for i in (1, 2, 3):
             (csv_root / f"f{i}.csv").write_text(f"pid,name\n{i},p{i}\n")
         pipe = ApprovalPipeline(
-            spark=spark, store=tmp_store, notifier=LogNotifier(),
+            spark=spark, notifier=LogNotifier(),
+            store_root=str(tmp_path / "store"),
             keys={"people": ["pid"]}, csv_root=str(csv_root),
         )
         led = pipe.ledger
@@ -75,7 +76,7 @@ class TestBatchedLedgerMarks:
             [(f"f{i}.csv", f"e{i}", "b", "insert") for i in (1, 2, 3)],
             ["file_name", "event_id", "bucket", "operation"],
         ))
-        v_before = tmp_store.current_version("processed_files")
+        v_before = pipe.store.current_version("processed_files")
         from tests.test_ledger_pipeline import batch, ev
 
         pipe.run_batch(batch(
@@ -84,17 +85,17 @@ class TestBatchedLedgerMarks:
             ev("e2", "approve", "f2.csv", "people", "insert"),
             ev("e3", "reject", "f3.csv", "people", "insert"),
         ))
-        assert tmp_store.current_version("processed_files") == v_before + 1
+        assert pipe.store.current_version("processed_files") == v_before + 1
         statuses = {r["event_id"]: r["status"] for r in led.processed_files().collect()}
         assert statuses == {"e1": "approved", "e2": "approved", "e3": "rejected"}
         assert len(pipe.notifier.sent) == 3
 
     def test_same_table_events_coalesce_to_one_overwrite(
-        self, spark, tmp_store, tmp_path
+        self, spark, tmp_path
     ):
         """Version growth per micro-batch is O(table op-runs), not
         O(events): interleaved inserts to two tables + a trailing
-        update coalesce into one overwrite per run, with sequential
+        update coalesce into one commit per run, with sequential
         first/last-per-key winners preserved across events in a run."""
         csv_root = tmp_path / "bucket"
         csv_root.mkdir()
@@ -108,7 +109,8 @@ class TestBatchedLedgerMarks:
         (csv_root / "u2.csv").write_text("pid,name\n2,new\n")
         (csv_root / "p1.csv").write_text("sku,price\nA,1\n")
         pipe = ApprovalPipeline(
-            spark=spark, store=tmp_store, notifier=LogNotifier(),
+            spark=spark, notifier=LogNotifier(),
+            store_root=str(tmp_path / "store"),
             keys={"people": ["pid"], "products": ["sku"]},
             csv_root=str(csv_root),
         )
@@ -130,9 +132,9 @@ class TestBatchedLedgerMarks:
         ))
         # people: create + insert-run + update-run = 3 versions;
         # products: create + insert-run = 2. Five events, three writes.
-        assert tmp_store.current_version("people") == 3
-        assert tmp_store.current_version("products") == 2
-        got = {r["pid"]: r["name"] for r in tmp_store.read("people").collect()}
+        assert pipe.store.current_version("people") == 3
+        assert pipe.store.current_version("products") == 2
+        got = {r["pid"]: r["name"] for r in pipe.store.read("people").collect()}
         assert got == {"1": "first", "2": "new", "3": "y"}
         statuses = {
             r["event_id"]: r["status"]
@@ -204,7 +206,7 @@ class TestQueueDeleteIds:
 
 class TestPositionalConflictResolution:
     def test_insert_first_row_wins_update_last_row_wins(
-        self, spark, tmp_store, tmp_path
+        self, spark, tmp_path
     ):
         """Reference ON CONFLICT semantics are executemany-positional
         (ADVICE r01): within one file, first duplicate wins for insert,
@@ -216,7 +218,8 @@ class TestPositionalConflictResolution:
         (csv_root / "ins.csv").write_text("pid,name\n1,zzz\n1,aaa\n")
         (csv_root / "upd.csv").write_text("pid,name\n1,zfirst\n1,alast\n")
         pipe = ApprovalPipeline(
-            spark=spark, store=tmp_store, notifier=LogNotifier(),
+            spark=spark, notifier=LogNotifier(),
+            store_root=str(tmp_path / "store"),
             keys={"people": ["pid"]}, csv_root=str(csv_root),
         )
         led = pipe.ledger
@@ -227,9 +230,9 @@ class TestPositionalConflictResolution:
         from tests.test_ledger_pipeline import batch, ev
 
         pipe.run_batch(batch(spark, ev("e1", "approve", "ins.csv", "people", "insert")))
-        assert [tuple(r) for r in tmp_store.read("people").collect()] == [("1", "zzz")]
+        assert [tuple(r) for r in pipe.store.read("people").collect()] == [("1", "zzz")]
         pipe.run_batch(batch(spark, ev("e2", "approve", "upd.csv", "people", "update")))
-        assert [tuple(r) for r in tmp_store.read("people").collect()] == [("1", "alast")]
+        assert [tuple(r) for r in pipe.store.read("people").collect()] == [("1", "alast")]
 
 
 class TestAsofEdgeCases:
@@ -333,44 +336,6 @@ class TestLshParameterization:
         assert counts and all(r["count"] <= 4 for r in counts)
 
 
-class TestCatalogTableStore:
-    def test_ledger_pipeline_runs_on_catalog_backend(self, spark, tmp_path):
-        """The control plane is backend-agnostic: the metastore-backed
-        store (saveAsTable under a namespace) passes the same
-        insert/upsert lifecycle as the pointer-swap store."""
-        import uuid
-
-        from etl_notifier_pipeline_spark.storage import CatalogTableStore
-
-        ns = f"eng_{uuid.uuid4().hex[:8]}"
-        store = CatalogTableStore(spark, namespace=ns)
-        csv_root = tmp_path / "bucket"
-        csv_root.mkdir()
-        (csv_root / "people.csv").write_text("pid,name\n1,ann\n2,bob\n")
-        (csv_root / "people_v2.csv").write_text("pid,name\n2,BOB\n3,cyd\n")
-        pipe = ApprovalPipeline(
-            spark=spark, store=store, notifier=LogNotifier(),
-            keys={"people": ["pid"]}, csv_root=str(csv_root),
-        )
-        led = pipe.ledger
-        led.record_arrivals(spark.createDataFrame(
-            [("people.csv", "e1", "b", "insert"), ("people_v2.csv", "e2", "b", "update")],
-            ["file_name", "event_id", "bucket", "operation"],
-        ))
-        from tests.test_ledger_pipeline import batch, ev
-
-        pipe.run_batch(batch(spark, ev("e1", "approve", "people.csv", "people", "insert")))
-        pipe.run_batch(batch(spark, ev("e2", "approve", "people_v2.csv", "people", "update")))
-        assert sorted(tuple(r) for r in store.read("people").collect()) == [
-            ("1", "ann"), ("2", "BOB"), ("3", "cyd")]
-        statuses = {r["event_id"]: r["status"] for r in led.processed_files().collect()}
-        assert statuses == {"e1": "approved", "e2": "approved"}
-        # replay is still idempotent on this backend
-        pipe.run_batch(batch(spark, ev("e1", "approve", "people.csv", "people", "insert")))
-        assert store.read("people").count() == 3
-        spark.sql(f"DROP DATABASE {ns} CASCADE")
-
-
 class TestCrashRecovery:
     def test_partial_write_is_invisible_and_recoverable(self, spark, tmp_store):
         """A writer that dies after writing files but BEFORE the
@@ -400,27 +365,31 @@ class TestPipelineWithBucketedStore:
         through apply_keyed_mutation and carry every unaffected
         bucket's files forward from the previous version — the
         O(affected-buckets) commit the full-rewrite TableStore can't
-        give. Results must be identical to the sequential semantics."""
+        give. Results must be identical to the sequential semantics.
+        The table is seeded with 8 buckets; the pipeline's store opens
+        it with the default count and must keep the recorded layout."""
         from etl_notifier_pipeline_spark.storage import BucketedTableStore
 
-        bstore = BucketedTableStore(
+        seed = BucketedTableStore(
             spark, str(tmp_path / "bstore"),
             keys={"people": ["pid"]}, n_buckets=8,
         )
         rows = [(str(i), f"p{i}") for i in range(80)]
-        bstore.overwrite(
+        seed.overwrite(
             "people", spark.createDataFrame(rows, ["pid", "name"])
         )
-        v1 = bstore.current_version("people")
-        m1 = bstore._manifest("people", v1)
 
         csv_root = tmp_path / "bucket"
         csv_root.mkdir()
         (csv_root / "u.csv").write_text("pid,name\n7,SEVEN\n41,FORTYONE\n")
         pipe = ApprovalPipeline(
-            spark=spark, store=bstore, notifier=LogNotifier(),
+            spark=spark, notifier=LogNotifier(),
             keys={"people": ["pid"]}, csv_root=str(csv_root),
+            store_root=str(tmp_path / "bstore"),
         )
+        bstore = pipe.store
+        v1 = bstore.current_version("people")
+        m1 = bstore._manifest("people", v1)
         pipe.ledger.record_arrivals(spark.createDataFrame(
             [("u.csv", "e1", "b", "update")],
             ["file_name", "event_id", "bucket", "operation"],

@@ -85,15 +85,16 @@ def test_streaming_drop_duplicates_watermark(spark, tmp_path):
     assert got == list(range(8))  # 3..4 delivered once, not twice
 
 
-def test_streaming_approval_pipeline_end_to_end(spark, tmp_store, tmp_path):
+def test_streaming_approval_pipeline_end_to_end(spark, tmp_path):
     """EP2->EP3 over a real stream: base64-JSON payloads (the Pub/Sub
     transport encoding) consumed by foreachBatch, effects in the store."""
     csv_root = tmp_path / "bucket"
     csv_root.mkdir()
     (csv_root / "people.csv").write_text("pid,name\n1,ann\n2,bob\n")
     pipe = ApprovalPipeline(
-        spark=spark, store=tmp_store, notifier=LogNotifier(),
+        spark=spark, notifier=LogNotifier(),
         keys={"people": ["pid"]}, csv_root=str(csv_root),
+        store_root=str(tmp_path / "store"),
     )
     pipe.ledger.record_arrivals(
         spark.createDataFrame(
@@ -114,7 +115,7 @@ def test_streaming_approval_pipeline_end_to_end(spark, tmp_store, tmp_path):
     raw = spark.readStream.schema("value string").json(str(src))
     q = pipe.start(raw, str(tmp_path / "ckpt2"))
     q.awaitTermination()
-    assert sorted(tuple(r) for r in tmp_store.read("people").collect()) == [
+    assert sorted(tuple(r) for r in pipe.store.read("people").collect()) == [
         ("1", "ann"), ("2", "bob")]
     assert pipe.ledger.processed_files().collect()[0]["status"] == "approved"
 
@@ -145,7 +146,7 @@ def test_store_time_travel(spark, tmp_store):
         tmp_store.read("t", version=99)
 
 
-def test_pipeline_restart_from_checkpoint_exactly_once(spark, tmp_store, tmp_path):
+def test_pipeline_restart_from_checkpoint_exactly_once(spark, tmp_path):
     """ST2 across a RESTART: a second query on the same checkpoint must
     not reprocess messages the first run consumed, and a replayed
     (duplicate) event id arriving after restart is dropped by the
@@ -155,8 +156,9 @@ def test_pipeline_restart_from_checkpoint_exactly_once(spark, tmp_store, tmp_pat
     (csv_root / "people.csv").write_text("pid,name\n1,ann\n2,bob\n")
     (csv_root / "people_v2.csv").write_text("pid,name\n2,BOB\n3,cyd\n")
     pipe = ApprovalPipeline(
-        spark=spark, store=tmp_store, notifier=LogNotifier(),
+        spark=spark, notifier=LogNotifier(),
         keys={"people": ["pid"]}, csv_root=str(csv_root),
+        store_root=str(tmp_path / "store"),
     )
     pipe.ledger.record_arrivals(
         spark.createDataFrame(
@@ -183,7 +185,7 @@ def test_pipeline_restart_from_checkpoint_exactly_once(spark, tmp_store, tmp_pat
     (src / "m1.json").write_text(msg("e1", "people.csv", "insert"))
     raw = spark.readStream.schema("value string").json(str(src))
     pipe.start(raw, str(tmp_path / "ckpt")).awaitTermination()
-    v_after_first = tmp_store.current_version("people")
+    v_after_first = pipe.store.current_version("people")
 
     # restart: new file with e2 AND a replay of e1
     (src / "m2.json").write_text(msg("e2", "people_v2.csv", "update"))
@@ -191,7 +193,7 @@ def test_pipeline_restart_from_checkpoint_exactly_once(spark, tmp_store, tmp_pat
     raw2 = spark.readStream.schema("value string").json(str(src))
     pipe.start(raw2, str(tmp_path / "ckpt")).awaitTermination()
 
-    rows = sorted(tuple(r) for r in tmp_store.read("people").collect())
+    rows = sorted(tuple(r) for r in pipe.store.read("people").collect())
     assert rows == [("1", "ann"), ("2", "BOB"), ("3", "cyd")]
     statuses = {
         r["event_id"]: r["status"]
@@ -200,7 +202,7 @@ def test_pipeline_restart_from_checkpoint_exactly_once(spark, tmp_store, tmp_pat
     assert statuses == {"e1": "approved", "e2": "approved"}
     # the replayed e1 must not have re-applied the insert: version grew
     # only by e2's single mutation
-    assert tmp_store.current_version("people") == v_after_first + 1
+    assert pipe.store.current_version("people") == v_after_first + 1
 
 
 def test_chained_window_aggregation_live_stream(spark, tmp_path):
@@ -312,7 +314,7 @@ def test_drop_duplicates_within_watermark(spark, tmp_path):
 
 
 def test_exactly_once_failure_injection_store_write_then_crash(
-    spark, tmp_store, tmp_path,
+    spark, tmp_path,
 ):
     """ST2 under the WORST torn-batch window: the foreachBatch body
     dies AFTER the store write but BEFORE the ledger update. Structured
@@ -329,8 +331,9 @@ def test_exactly_once_failure_injection_store_write_then_crash(
     (csv_root / "people.csv").write_text("pid,name\n1,ann\n2,bob\n")
     (csv_root / "people_v2.csv").write_text("pid,name\n2,BOB\n3,cyd\n")
     pipe = ApprovalPipeline(
-        spark=spark, store=tmp_store, notifier=LogNotifier(),
+        spark=spark, notifier=LogNotifier(),
         keys={"people": ["pid"]}, csv_root=str(csv_root),
+        store_root=str(tmp_path / "store"),
     )
     pipe.ledger.record_arrivals(
         spark.createDataFrame(
@@ -374,7 +377,7 @@ def test_exactly_once_failure_injection_store_write_then_crash(
         assert "injected crash" in str(exc)
 
     # torn state is exactly as designed: effects applied, ledger silent
-    assert sorted(tuple(r) for r in tmp_store.read("people").collect()) == [
+    assert sorted(tuple(r) for r in pipe.store.read("people").collect()) == [
         ("1", "ann"), ("2", "BOB"), ("3", "cyd")]
     assert pipe.ledger.processed_files().filter(F.col("is_processed")).count() == 0
 
@@ -384,7 +387,7 @@ def test_exactly_once_failure_injection_store_write_then_crash(
     pipe.start(raw2, str(tmp_path / "ckpt")).awaitTermination()
 
     # no duplicate effects: state identical to a clean single delivery
-    assert sorted(tuple(r) for r in tmp_store.read("people").collect()) == [
+    assert sorted(tuple(r) for r in pipe.store.read("people").collect()) == [
         ("1", "ann"), ("2", "BOB"), ("3", "cyd")]
     statuses = {
         r["event_id"]: r["status"]
@@ -392,10 +395,10 @@ def test_exactly_once_failure_injection_store_write_then_crash(
     }
     assert statuses == {"e1": "approved", "e2": "approved"}
     # and a THIRD run on the same checkpoint is a no-op (offsets committed)
-    v = tmp_store.current_version("people")
+    v = pipe.store.current_version("people")
     raw3 = spark.readStream.schema("value string").json(str(src))
     pipe.start(raw3, str(tmp_path / "ckpt")).awaitTermination()
-    assert tmp_store.current_version("people") == v
+    assert pipe.store.current_version("people") == v
 
 
 def test_st14_fold_torn_at_every_commit_point_converges(spark, tmp_path):
